@@ -336,8 +336,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def gopher_repetition(spark, sf):
         # r5 Gopher §A1.1 completion: top-{2,3,4}-gram char coverage and
         # duplicate-{5..10}-gram char fractions via the serving-shape
-        # Arrow UDF (functions/text.with_repetition_columns mode='arrow';
-        # the HOF fold twin is pinned bit-identical in
+        # Arrow UDF (functions/text.with_repetition_columns; the HOF fold
+        # twin is pinned bit-identical in
         # tests/test_misc_ops.py). The documents table is random
         # text, so repetition is PLANTED (doc_id % 3: hammered 2-gram /
         # 5-word phrase ×2 / untouched) identically in both engines; all

@@ -1,7 +1,8 @@
 """Structured Streaming variant of the quality pipeline.
 
 The reference is batch-only (SURVEY.md §2.9); this is the net-new streaming
-surface: the SAME narrow transform chain (score UDF + heuristic columns +
+surface: the SAME narrow transform chain (one Arrow UDF pass returning
+scores, scrubbed text and numeric heuristic features, then the JVM-side
 keep predicate) applied to a ``readStream`` source, so batch and streaming
 share one code path (``run_quality_pipeline`` works on both because every
 stage is a stateless projection — no watermark needed for the filter

@@ -5,12 +5,20 @@
 - scrubbed_text BYTE-identical per url
 - lang_conf / perplexity bit-identical (shared scoring code)
 - deterministic across partitioning
+- served heuristic features ≡ the Spark SQL reference columns
 """
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
+from language_identification_spark.functions.text import (
+    DUP_NGRAM_NS,
+    TOP_NGRAM_NS,
+    with_quality_columns,
+)
 from language_identification_spark.oracle.pipeline import (
     run_oracle_pipeline,
     train_oracle_models,
@@ -19,6 +27,34 @@ from language_identification_spark.pipeline.quality import (
     run_quality_pipeline,
     train_quality_models,
 )
+from language_identification_spark.pipeline.rules import keep_expr
+
+FEATURE_COLS = (
+    ["n_chars", "n_words", "mean_word_len", "symbol_ratio",
+     "distinct_word_ratio", "stopword_ratio", "bullet_line_ratio",
+     "ellipsis_line_ratio", "dup_line_ratio"]
+    + [f"top_{n}gram_char_frac" for n in TOP_NGRAM_NS]
+    + [f"dup_{n}gram_char_frac" for n in DUP_NGRAM_NS]
+    + ["n_cjk", "n_script_letters", "is_cjk", "distinct_char_4gram_ratio"]
+)
+
+
+def sql_reference(served, stopwords):
+    """The Spark SQL reference for a served output: ``with_quality_columns``
+    over the Python-stripped text (the serving UDF's normalization), and
+    the keep predicate over those columns plus the served scores."""
+
+    @F.pandas_udf("string")
+    def py_strip(s: pd.Series) -> pd.Series:
+        return s.fillna("").str.strip()
+
+    base = served.select(
+        "url", "lang_pred", "lang_conf", "perplexity",
+        py_strip(F.col("text")).alias("norm_text"),
+    )
+    return with_quality_columns(base, "norm_text", stopwords=stopwords).withColumn(
+        "keep", keep_expr()
+    )
 
 
 @pytest.fixture(scope="module")
@@ -60,7 +96,6 @@ def test_langpred_and_scrub_byte_identical(oracle_out, spark_out):
         s = spark_out[url]
         assert s["lang_pred"] == o["lang_pred"], url
         assert s["scrubbed_text"].encode() == o["scrubbed_text"].encode(), url
-        assert s["norm_text"] == o["norm_text"], url
 
 
 def test_scores_bit_identical(oracle_out, spark_out):
@@ -107,32 +142,25 @@ def test_output_schema(spark, pages_df, spark_models):
 
 
 def test_fused_matches_native(spark, pages_df, spark_models):
-    native = run_quality_pipeline(spark, pages_df, spark_models)
-    fused = run_quality_pipeline(spark, pages_df, spark_models, heuristics="fused")
-    from language_identification_spark.functions.text import (
-        DUP_NGRAM_NS,
-        TOP_NGRAM_NS,
-    )
-
-    cols = ["url", "keep", "lang_pred", "lang_conf", "perplexity",
-            "scrubbed_text", "n_chars", "n_words", "mean_word_len",
-            "symbol_ratio", "distinct_word_ratio", "stopword_ratio",
-            "bullet_line_ratio", "ellipsis_line_ratio", "dup_line_ratio"]
-    cols += [f"top_{n}gram_char_frac" for n in TOP_NGRAM_NS]
-    cols += [f"dup_{n}gram_char_frac" for n in DUP_NGRAM_NS]
-    cols += ["n_cjk", "n_script_letters", "is_cjk", "distinct_char_4gram_ratio"]
-    a = sorted(map(tuple, native.select(cols).collect()))
-    b = sorted(map(tuple, fused.select(cols).collect()))
+    """The served features (the Python twin inside the one Arrow pass) ≡
+    the Spark SQL reference columns over the stripped text, and the keep
+    predicate decides identically over either."""
+    served = run_quality_pipeline(spark, pages_df, spark_models)
+    ref = sql_reference(served, spark_models.stopwords)
+    cols = ["url", "keep"] + FEATURE_COLS
+    a = sorted(map(tuple, ref.select(cols).collect()))
+    b = sorted(map(tuple, served.select(cols).collect()))
     assert a == b
 
 
 def test_custom_stopword_lexicon_flows_through(spark, pages_df, pages_pdf):
     """r4: the stop-word lexicon rides the model broadcast (QualityModels)
-    and reaches all three implementations — native SQL columns, fused
-    Arrow UDF, and the pure-Python oracle — producing identical
-    stopword_ratio and keep decisions. A deliberately absurd lexicon
-    (words that never occur) must drop every doc via the stop-word rule
-    alone, proving the custom list is actually in effect everywhere."""
+    and reaches all three implementations — the serving Arrow UDF, the
+    SQL reference columns and the pure-Python oracle — producing
+    identical stopword_ratio and keep decisions. A deliberately absurd
+    lexicon (words that never occur) must drop every doc via the
+    stop-word rule alone, proving the custom list is actually in effect
+    everywhere."""
     from language_identification_spark.oracle.pipeline import (
         run_oracle_pipeline as oracle_run,
         train_oracle_models as oracle_train,
@@ -144,11 +172,11 @@ def test_custom_stopword_lexicon_flows_through(spark, pages_df, pages_pdf):
     )
     assert models.stopwords == absurd
 
-    native = run_quality_pipeline(spark, pages_df, models)
-    fused = run_quality_pipeline(spark, pages_df, models, heuristics="fused")
+    served = run_quality_pipeline(spark, pages_df, models)
+    ref = sql_reference(served, models.stopwords)
     cols = ["url", "stopword_ratio", "keep", "is_cjk"]
-    a = sorted(map(tuple, native.select(cols).collect()))
-    b = sorted(map(tuple, fused.select(cols).collect()))
+    a = sorted(map(tuple, ref.select(cols).collect()))
+    b = sorted(map(tuple, served.select(cols).collect()))
     assert a == b
     assert all(r[1] == 0.0 for r in a)   # no doc contains the absurd words
     # the stop-word rule drops every word-routed doc; CJK-majority docs
@@ -165,10 +193,11 @@ def test_custom_stopword_lexicon_flows_through(spark, pages_df, pages_pdf):
 
 def test_large_lexicon_broadcast_path(spark, pages_df):
     """r5 (judge ask): a production-size (10k-word) stop-word lexicon must
-    NOT enter the plan as a literal array — it rides a one-row broadcast
-    relation — while keep decisions and stopword_ratio stay identical to
-    the fused (hash-set) serving path. A small-lexicon control proves the
-    literal-detection is non-vacuous (plan truncation can hide arrays)."""
+    NOT enter the SQL reference's plan as a literal array — it rides a
+    one-row broadcast relation — while keep decisions and stopword_ratio
+    stay identical to the serving UDF's hash-set lookup. A small-lexicon
+    control proves the literal-detection is non-vacuous (plan truncation
+    can hide arrays)."""
     from language_identification_spark.fixtures.pages import fixture_stopwords
 
     sub = pages_df.limit(150)
@@ -178,23 +207,20 @@ def test_large_lexicon_broadcast_path(spark, pages_df):
 
     # control: small lexicon takes the literal path and IS plan-visible
     small = fixture_stopwords() + ("zzcontrolsentinel",)
-    models_small = train_quality_models(
-        pages_df.filter("split = 'train'"), stopwords=small
-    )
-    native_small = run_quality_pipeline(spark, sub, models_small)
-    plan_small = native_small._jdf.queryExecution().analyzed().toString()
+    ref_small = with_quality_columns(sub.select("url", "text"), "text", stopwords=small)
+    plan_small = ref_small._jdf.queryExecution().analyzed().toString()
     assert "zzcontrolsentinel" in plan_small
 
     big = fixture_stopwords() + tuple(f"zzfill{i}" for i in range(10_000))
     models = train_quality_models(pages_df.filter("split = 'train'"), stopwords=big)
-    native = run_quality_pipeline(spark, sub, models)
-    fused = run_quality_pipeline(spark, sub, models, heuristics="fused")
+    served = run_quality_pipeline(spark, sub, models)
+    ref = sql_reference(served, big)
     cols = ["url", "stopword_ratio", "keep"]
-    a = sorted(map(tuple, native.select(cols).collect()))
-    b = sorted(map(tuple, fused.select(cols).collect()))
+    a = sorted(map(tuple, ref.select(cols).collect()))
+    b = sorted(map(tuple, served.select(cols).collect()))
     assert a == b
     assert any(r[1] > 0 for r in a)  # the real stop words still hit
-    plan = native._jdf.queryExecution().analyzed().toString()
+    plan = ref._jdf.queryExecution().analyzed().toString()
     assert "zzfill9999" not in plan  # no 10k literal anywhere in the plan
-    assert "__stop_lex" not in native.columns  # transport column dropped
+    assert "__stop_lex" not in ref.columns  # transport column dropped
     spark.conf.unset("spark.sql.debug.maxToStringFields")

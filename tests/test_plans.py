@@ -3,6 +3,8 @@ the results."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from language_identification_spark.models.score import score_ngram_relational
@@ -16,15 +18,21 @@ from language_identification_spark.plans.asserts import (
     assert_no_shuffle,
     assert_pushed_filter,
     count_exchanges,
+    explain_str,
 )
 
 
 def test_pipeline_is_narrow(spark, pages_df):
-    """The serving pipeline must be shuffle-free: at 100 TB any Exchange
-    on the scored side is a regression."""
+    """The serving pipeline must be shuffle-free (at 100 TB any Exchange
+    on the scored side is a regression) and ONE Python pass: exactly one
+    ArrowEvalPython node, and no normalized-text column handed back to
+    the JVM for a second scan."""
     models = train_quality_models(pages_df.filter("split = 'train'"))
     out = run_quality_pipeline(spark, pages_df, models)
     assert_no_shuffle(out)
+    plan = explain_str(out)
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) == 1, plan
+    assert "norm_text" not in out.columns
 
 
 def test_model_join_is_broadcast(spark, pages_df):
@@ -385,18 +393,16 @@ def test_bloom_probe_never_shuffles_text(spark, sf_dir):
 
 
 def test_repetition_arrow_udf_evaluates_once(spark):
-    """r6: the arrow repetition mode extracts 10 struct fields from ONE
+    """r6: the repetition columns extract 10 struct fields from ONE
     UDF result column — projection collapse must not duplicate the
     Python call. Pin: exactly one ArrowEvalPython node, and the plan
     stays shuffle-free."""
     from language_identification_spark.functions.text import (
         with_repetition_columns,
     )
-    from language_identification_spark.plans.asserts import explain_str
 
     df = spark.createDataFrame([(i, "a b c a b") for i in range(4)], "i long, t string")
-    out = with_repetition_columns(df, "t", "arrow")
-    import re
+    out = with_repetition_columns(df, "t")
 
     plan = explain_str(out)
     # formatted explain names each node twice (tree + detail section);

@@ -684,7 +684,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             quality_score,
         )
         from language_identification_spark.operators.dedup import (
-            _register_cache,
+            scoped_persist,
         )
         from language_identification_spark.operators.filtering import (
             percentile_filter,
@@ -695,7 +695,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # an unpersisted base pays the text scan + counts UDF twice.
         # Registered with the active pair_cache_scope like the span/DSIR
         # bases; measured 2.3-3.4 s → 1.3-2.3 s at sf1.0.
-        d = _register_cache(
+        d = scoped_persist(
             _t(spark, sf, "documents").select(
                 "doc_id", "lang", quality_score(F.col("text")).alias("q_score")
             )
@@ -1515,7 +1515,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             quality_score,
         )
         from language_identification_spark.operators.dedup import (
-            _register_cache,
+            scoped_persist,
         )
         from language_identification_spark.operators.selection import (
             quantile_buckets,
@@ -1524,7 +1524,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # Same narrow-base persist as quality_percentile_filter: tercile
         # thresholds + bucket join otherwise re-run the counts UDF scan
         # twice. Measured 2.6-2.8 s → 1.3-1.5 s at sf1.0.
-        d = _register_cache(
+        d = scoped_persist(
             _t(spark, sf, "documents").select(
                 "doc_id", "lang", quality_score(F.col("text")).alias("q_score")
             )

@@ -178,126 +178,6 @@ def pipeline_run(spark, corpus_path: str, models) -> tuple[float, int, float]:
     return wall, n, n / wall
 
 
-def synth_lsh_corpus(spark, n_docs: int, n_words: int = 40, vocab: int = 1000,
-                     dup_every: int = 100, out: str | None = None):
-    """Deterministic synthetic corpus in the REALISTIC dedup regime:
-    ~unique docs with ~1/dup_every planted near-dups (one word differs
-    from the previous doc), unlike the gate corpus where every doc is a
-    candidate. Pure SQL generation (hash-indexed words), so 1M+ docs
-    materialize in seconds."""
-    base = spark.range(n_docs).select(F.col("id").alias("doc_id"))
-    is_dup = (F.col("doc_id") % dup_every == 1) & (F.col("doc_id") > 0)
-    src = F.when(is_dup, F.col("doc_id") - 1).otherwise(F.col("doc_id"))
-
-    def word(i):
-        return F.concat(
-            F.lit("w"),
-            F.pmod(F.xxhash64(src * F.lit(131071) + F.lit(i * 8191)), F.lit(vocab))
-            .cast("string"),
-        )
-
-    first = F.when(is_dup, F.lit("zdup")).otherwise(word(0))
-    text = F.concat_ws(" ", first, *[word(i) for i in range(1, n_words)])
-    docs = base.select("doc_id", text.alias("text"))
-    if out is not None:
-        docs.repartition(64).write.mode("overwrite").parquet(out)
-        docs = spark.read.parquet(out)
-    return docs
-
-
-def lsh_ab_report(spark, n_docs: int) -> dict:
-    """Candidate-first vs always-shingle A/B at corpus scale (judge ask
-    r5): same LSH + verify job over the same ~1%-dup synthetic corpus,
-    the only difference being whether the verify stage semi-joins the
-    corpus down to candidate ids before shingling. One clean-window run
-    per variant (each LSH pass is minutes at 1.28M docs; the windows are
-    contamination-gated, so best-of-N adds cost, not signal); also
-    reports the incremental (new-shard × corpus) A/B, and repeats both
-    with broadcast joins disabled (the huge-candidate-set regime). Pair
-    counts are checked equal across variants separately."""
-    import tempfile
-
-    from language_identification_spark.operators.dedup import (
-        incremental_near_duplicates,
-        minhash_near_duplicates,
-        pair_cache_scope,
-    )
-
-    path = os.path.join(tempfile.gettempdir(), "bench_lsh_ab_corpus")
-    docs = synth_lsh_corpus(spark, n_docs, out=path)
-    # incremental regime: the "new shard" is the planted near-dups (1%,
-    # each duplicating its corpus predecessor) plus an equal tranche of
-    # fresh docs; the corpus is everything else.
-    corpus = docs.filter("doc_id % 100 NOT IN (1, 2)")
-    new = docs.filter("doc_id % 100 IN (1, 2)")
-
-    out: dict = {"n_docs": n_docs}
-
-    def timed(make_df, key):
-        runs = []
-        attempts = 0
-        while sum(1 for _, ok in runs if ok) < 1 and attempts < 4:
-            attempts += 1
-            with pair_cache_scope():
-                runs.append(_timed_materialize(make_df))
-        valid = [r for r in runs if r[1]] or runs
-        out[key] = round(min(valid)[0], 3)
-
-    def ab(prefix):
-        timed(
-            lambda: minhash_near_duplicates(docs, threshold=0.5, candidate_first=True),
-            f"{prefix}same_shard_candidate_first_s",
-        )
-        timed(
-            lambda: minhash_near_duplicates(docs, threshold=0.5, candidate_first=False),
-            f"{prefix}same_shard_always_shingle_s",
-        )
-        timed(
-            lambda: incremental_near_duplicates(
-                new, corpus, threshold=0.5, candidate_first=True
-            ),
-            f"{prefix}incremental_candidate_first_s",
-        )
-        timed(
-            lambda: incremental_near_duplicates(
-                new, corpus, threshold=0.5, candidate_first=False
-            ),
-            f"{prefix}incremental_always_shingle_s",
-        )
-        for job in ("same_shard", "incremental"):
-            out[f"{prefix}{job}_speedup_always_over_candfirst"] = round(
-                out[f"{prefix}{job}_candidate_first_s"]
-                / out[f"{prefix}{job}_always_shingle_s"],
-                3,
-            )
-
-    # Regime A (default configs): the ~1% candidate-id set broadcasts, so
-    # the always-shingle verify is a narrow broadcast-join scan.
-    ab("")
-    # Regime B: candidate set NOT broadcastable (the 10^8+-candidate web
-    # regime, simulated by disabling broadcast joins) — the verify join
-    # must shuffle, and the semi-join prefilter's byte savings can pay.
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    aqe_thresh = spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold", None)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    try:
-        ab("nobroadcast_")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-        if aqe_thresh is None:
-            spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-        else:
-            spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", aqe_thresh)
-    with pair_cache_scope():
-        out["same_shard_pairs"] = minhash_near_duplicates(docs, threshold=0.5).count()
-    with pair_cache_scope():
-        out["incremental_pairs"] = incremental_near_duplicates(
-            new, corpus, threshold=0.5
-        ).count()
-    return out
-
-
 def scaling_report(
     sf_dir: str, mult: int = int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "256"))
 ) -> dict:
@@ -442,15 +322,6 @@ def main() -> None:
     queries["quality_pipeline"] = round(pipe_wall, 3)
     spark.catalog.clearCache()
 
-    # Corpus-scale LSH A/B (candidate-first vs always-shingle) — 8 LSH
-    # passes over 1.28M docs, ~15-25 min, so opt-in (the per-round driver
-    # bench stays fast); `--scaling` runs it too and BENCH.md records it.
-    lsh_ab = None
-    if "--lsh-ab" in sys.argv or scaling:
-        lsh_ab = lsh_ab_report(
-            spark, int(os.environ.get("SPARK_GRAFT_LSH_AB_DOCS", "1280000"))
-        )
-
     result = {
         "metric": "headline_queries_total_wall",
         "value": round(sum(queries.values()), 3),
@@ -463,80 +334,11 @@ def main() -> None:
         "pipeline_window_clean": bool(pipe_clean),
     }
 
-    if lsh_ab is not None:
-        result["lsh_ab"] = lsh_ab
     if scaling_result is not None:
         result["scaling"] = scaling_result
         _write_bench_md(result)
 
     print(json.dumps(result))
-
-
-def _lsh_ab_md(ab: dict | None) -> str:
-    if not ab:
-        return ""
-
-    def _winner(ratio: float) -> str:
-        # ratio = candidate-first wall / always-shingle wall
-        if ratio > 1.05:
-            return f"always-shingle ({ratio:.2f}x)"
-        if ratio < 0.95:
-            return f"candidate-first ({1 / ratio:.2f}x)"
-        return f"within noise ({ratio:.2f})"
-
-    ss = _winner(ab["same_shard_speedup_always_over_candfirst"])
-    ssn = _winner(ab["nobroadcast_same_shard_speedup_always_over_candfirst"])
-    inc = _winner(ab["incremental_speedup_always_over_candfirst"])
-    incn = _winner(ab["nobroadcast_incremental_speedup_always_over_candfirst"])
-    return f"""
-## LSH verify-stage A/B at corpus scale ({ab['n_docs']:,} docs, ~1% planted near-dups)
-
-Round 4 ARGUED that semi-joining the corpus down to candidate ids before
-shingling ("candidate-first") is the scale shape, because always-shingle
-would shuffle every document's shingle array into the verify join. The
-r5 measurement in the realistic regime (candidates ≪ corpus —
-{ab['same_shard_pairs']:,} verified same-shard pairs /
-{ab['incremental_pairs']:,} incremental pairs out of {ab['n_docs']:,}
-docs), repeated across bench runs, shows the split is by JOB SHAPE.
-Same-shard self-join: the corpus is fully scanned for signatures anyway,
-shingles ride that same narrow pass, and the tiny candidate side
-broadcasts (or shuffles 8-byte ids) — so the two variants land within
-run-to-run noise of each other, and ACROSS bench runs the same-shard
-winner has flipped sign (an earlier clean-window run measured
-always-shingle 1.41x faster; this run measured {ss} /
-{ssn} without broadcast). Incremental new×corpus: the corpus side has
-no other reason to be shingled, so the candidate-id semi-join removes
-O(corpus) shingle work — candidate-first has won EVERY measured run, in
-both broadcast regimes (this run: {inc} with broadcast,
-{incn} without). Speedup below = candidate-first wall ÷
-always-shingle wall (>1 ⇒ always-shingle faster):
-
-| regime | job | candidate-first (s) | always-shingle (s) | always-shingle is N× faster |
-|---|---|---|---|---|
-| broadcastable candidates (default) | same-shard near-dup | {ab['same_shard_candidate_first_s']} | {ab['same_shard_always_shingle_s']} | {ab['same_shard_speedup_always_over_candfirst']}× |
-| broadcastable candidates (default) | incremental (new × corpus) | {ab['incremental_candidate_first_s']} | {ab['incremental_always_shingle_s']} | {ab['incremental_speedup_always_over_candfirst']}× |
-| broadcast disabled (huge-candidate-set stand-in) | same-shard near-dup | {ab['nobroadcast_same_shard_candidate_first_s']} | {ab['nobroadcast_same_shard_always_shingle_s']} | {ab['nobroadcast_same_shard_speedup_always_over_candfirst']}× |
-| broadcast disabled (huge-candidate-set stand-in) | incremental (new × corpus) | {ab['nobroadcast_incremental_candidate_first_s']} | {ab['nobroadcast_incremental_always_shingle_s']} | {ab['nobroadcast_incremental_speedup_always_over_candfirst']}× |
-
-So the measured decision rule (now the per-operator defaults):
-**always-shingle for the same-shard self-join
-(`minhash_near_duplicates`) — no robust winner there, and
-always-shingle is the simpler plan with no materialization barrier;
-candidate-first for the incremental new×corpus job
-(`incremental_near_duplicates`) — a consistent winner whose margin
-grows with corpus size since the avoided shingle pass is O(corpus),
-while the new shard and its candidate-id set stay small.** The other
-flag value remains an explicit escape hatch on both operators, output
-pinned identical.
-
-Input: deterministic synthetic corpus (`bench.synth_lsh_corpus`) of
-~unique hash-generated 40-word docs with every 100th doc a one-word-off
-near-dup of its predecessor — the web-corpus shape, unlike the dense-dup
-gate corpus where every doc is a candidate. One contamination-gated
-clean-window run per variant (see Methodology above). Output pairs are
-identical between variants
-(pinned by tests/test_operators.py::test_candidate_first_ab_equivalence).
-"""
 
 
 def _write_bench_md(result: dict) -> None:
@@ -577,7 +379,6 @@ measured pairs: {s['all_pair_speedups']}.
 
 Speedup 8→32 cores: **{s['speedup_8_to_32']}×**; raw N→4N efficiency
 **{s['efficiency_n_to_4n_raw']}**.
-{_lsh_ab_md(result.get('lsh_ab'))}
 
 **Hardware context**: a pure-Python cache-resident busy loop (no Spark, no
 memory traffic) achieves only **{s['hw_per_core_ceiling_8_to_32']}×

@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import contextlib
 import threading
-import warnings
 
 import numpy as np
 import pandas as pd
@@ -40,21 +39,19 @@ MERSENNE31 = (1 << 31) - 1
 
 
 class CacheScope:
-    """Release handle for the persisted/checkpointed/spilled intermediates
+    """Release handle for the persisted/checkpointed intermediates
     created by LSH-family operator calls while the scope was active.
 
     A registry (not an attribute on the returned DataFrame) because any
     downstream transform (select/filter/...) returns a NEW DataFrame
     without custom attributes — release must not depend on callers
-    preserving the original object. Entries are of three kinds with
+    preserving the original object. Entries are of two kinds with
     DIFFERENT release consequences:
 
     - persisted DataFrames (banded tables, candidate pairs): recomputable
       lineage — an early release costs recompute, never wrong rows;
     - _CkptBlocks (dedup_components labels): localCheckpoint TRUNCATED the
-      lineage, so after release the result DataFrame is UNREADABLE;
-    - _SpillTable (spill_dir mode): release drops the catalog entry the
-      returned pairs read from.
+      lineage, so after release the result DataFrame is UNREADABLE.
 
     Hence: release a scope only once every result produced under it has
     been materialized (write/collect).
@@ -107,9 +104,9 @@ def pair_cache_scope():
     This is the safe release pattern when several LSH-family results are
     in flight: each call site frees exactly its own intermediates, and a
     release cannot invalidate another pending result (the r4 global-drain
-    hazard). Exiting the scope makes checkpoint/spill-backed results
-    (``dedup_components`` labels, ``spill_dir`` pairs) created inside it
-    UNREADABLE — consume them before leaving the scope. Reentrant and
+    hazard). Exiting the scope makes checkpoint-backed results
+    (``dedup_components`` labels) created inside it UNREADABLE — consume
+    them before leaving the scope. Reentrant and
     thread-safe (the active-scope stack is thread-local)."""
     scope = CacheScope()
     stack = getattr(_ACTIVE, "stack", None)
@@ -123,7 +120,11 @@ def pair_cache_scope():
         scope.release()
 
 
-def _register_cache(df: DataFrame) -> DataFrame:
+def scoped_persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` and register it with the active
+    :func:`pair_cache_scope` (or the unscoped default registry drained by
+    :func:`release_pair_cache`), so its blocks are freed with the scope
+    instead of living for the rest of the SparkContext."""
     df.persist()
     _current_scope().add(df)
     return df
@@ -264,51 +265,10 @@ def jaccard_similar_pairs(
     )
 
 
-class _SpillTable:
-    """Cleanup handle for a spilled banded table: drops the catalog entry
-    on release (files under the caller's spill_dir are the caller's to
-    manage — on a cluster they are the durable artifact). Quacks like a
-    persisted DataFrame for the :data:`_LIVE_PAIR_CACHES` registry."""
-
-    def __init__(self, spark, name: str):
-        self._spark = spark
-        self._name = name
-
-    def unpersist(self) -> None:
-        self._spark.sql(f"DROP TABLE IF EXISTS {self._name}")
-
-
-def _spill_banded(banded: DataFrame, key_cols: list[str], spill_dir: str) -> DataFrame:
-    """Write the banded table as a Hive-bucketed parquet table (bucketed by
-    the band-hash key) and read it back: both sides of the self-join then
-    scan the SAME bucketed table, so the join needs no Exchange at all —
-    the spill replaces executor-memory persist() when the corpus exceeds
-    what MEMORY_AND_DISK should hold (at 100 TB the banded table is
-    O(bands × corpus) rows; a disk-backed bucketed table is the only shape
-    that both survives executor loss and co-locates the join)."""
-    import os
-    import uuid
-
-    from ..sources.catalog import write_join_bucketed
-
-    name = f"lid_banded_spill_{uuid.uuid4().hex[:8]}"
-    write_join_bucketed(
-        banded,
-        name,
-        os.path.join(spill_dir, name),
-        bucket_col=key_cols[-1],
-        n_buckets=64,
-    )
-    spark = banded.sparkSession
-    _current_scope().add(_SpillTable(spark, name))
-    return spark.table(name)
-
-
 def _bucket_self_join(
     banded: DataFrame,
     key_cols: list[str],
     max_bucket: int | None,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """(id_a, id_b) distinct candidate pairs from a (id, *key_cols) bucket
     table, with a hot-bucket guard.
@@ -333,22 +293,9 @@ def _bucket_self_join(
     by :func:`release_pair_cache`) — long-lived sessions that release
     nothing keep the MEMORY_AND_DISK blocks for the life of the
     SparkContext.
-
-    ``spill_dir``: when set, the multi-consumer banded table is written as
-    a Hive-bucketed parquet table (see :func:`_spill_banded`) instead of
-    ``persist()`` — the corpus-scale mode where the banded rows exceed
-    executor memory; pair output is identical, and release drops the
-    catalog entry instead of unpersisting blocks.
     """
-    # The cache/spill decision is independent of the hot-bucket guard
-    # (ADVICE r4: spill_dir used to be silently ignored with
-    # max_bucket=None): even unguarded, `banded` feeds both self-join
-    # sides and its lineage contains the signature UDF.
-    if spill_dir is not None:
-        banded = _spill_banded(banded, key_cols, spill_dir)
-    elif max_bucket is not None:
-        banded = _register_cache(banded)
     if max_bucket is not None:
+        banded = scoped_persist(banded)
         hot = (
             banded.groupBy(*key_cols)
             .agg(F.count("*").alias("_bsz"), F.min("id").alias("_bmin"))
@@ -374,9 +321,7 @@ def _bucket_self_join(
     return pairs.distinct()
 
 
-def release_pair_cache(
-    pairs: DataFrame | None = None, *, include_blocks: bool = False
-) -> None:
+def release_pair_cache(*, include_blocks: bool = False) -> None:
     """Release the UNSCOPED caches created by the LSH family (those made
     outside any :func:`pair_cache_scope`). No-op if nothing was cached;
     without some release, each guarded LSH call leaves its
@@ -387,28 +332,16 @@ def release_pair_cache(
     By default only RECOMPUTABLE entries are drained (persisted banded /
     candidate-pair DataFrames): releasing those early merely costs a
     recompute, never a wrong or unreadable result, so the default is safe
-    to call with other LSH results still pending. Entries whose backing
-    is a checkpoint or spill table (``dedup_components`` labels;
-    ``spill_dir`` band tables) make their result DataFrame UNREADABLE
-    once freed — draining them requires ``include_blocks=True`` and the
-    same discipline as a scope: every outstanding checkpoint/spill-backed
-    result must already be materialized. (Before r5 the no-arg call
-    drained blocks too — the unsafe half of that contract now needs the
-    explicit flag.)
+    to call with other LSH results still pending. Entries backed by a
+    checkpoint (``dedup_components`` labels) make their result DataFrame
+    UNREADABLE once freed — draining them requires ``include_blocks=True``
+    and the same discipline as a scope: every outstanding
+    checkpoint-backed result must already be materialized.
 
     Drains a module-level registry, so it works no matter what transforms
     the caller applied to the returned pairs (a ``.select()`` returns a
     fresh DataFrame — an attribute riding on the original object would
-    silently make release a no-op). The ``pairs`` argument never selected
-    what to release and is deprecated."""
-    if pairs is not None:
-        warnings.warn(
-            "release_pair_cache(pairs) is deprecated and the argument is "
-            "ignored — the registry is module-level; use pair_cache_scope() "
-            "to scope release to one operator call",
-            DeprecationWarning,
-            stacklevel=2,
-        )
+    silently make release a no-op)."""
     _DEFAULT_SCOPE.release(recomputable_only=not include_blocks)
 
 
@@ -480,7 +413,6 @@ def minhash_lsh_candidates(
     bands: int = 16,
     n_hashes: int = 64,
     max_bucket: int | None = 10_000,
-    spill_dir: str | None = None,
 ) -> DataFrame:
     """(id_a, id_b) candidate pairs: equal band-hash in ≥1 of ``bands``
     bands. Shuffle key = (band_idx, band_hash) — collision buckets only.
@@ -494,7 +426,7 @@ def minhash_lsh_candidates(
     :func:`release_pair_cache` after materializing (see
     ``_bucket_self_join``)."""
     banded = _band_table(sigs, bands, n_hashes)
-    return _bucket_self_join(banded, ["band", "bh"], max_bucket, spill_dir)
+    return _bucket_self_join(banded, ["band", "bh"], max_bucket)
 
 
 def _band_table(sigs: DataFrame, bands: int, n_hashes: int) -> DataFrame:
@@ -557,21 +489,17 @@ def incremental_near_duplicates(
     n_hashes: int = 64,
     bands: int = 16,
     seed: int = 42,
-    candidate_first: bool = True,
 ) -> DataFrame:
     """(new_id, corpus_id, jaccard ≥ threshold): incoming documents that
     near-duplicate something ALREADY IN the corpus.
-    ``candidate_first`` picks the verify shape. Default True — the
-    OPPOSITE of :func:`minhash_near_duplicates`, per the fixed-harness
-    r5 A/B at 1.28M docs / ~1% planted dups (BENCH.md): here the corpus
-    side is unbounded and only the ~1% of corpus docs that collide with
-    the new shard ever need verify shingles, so semi-joining the corpus
-    on the (tiny, broadcastable) candidate-id set before shingling
-    skips shingle work over ~99% of the corpus — measured 1.10× faster
-    with broadcast joins on and 1.17× with them off, i.e. it wins in
-    BOTH broadcast regimes, and the margin grows with corpus size since
-    the avoided work is O(corpus). Identical output either way
-    (test_candidate_first_ab_equivalence).
+
+    Verify shape: both sides are semi-joined on the candidate id set
+    BEFORE the corpus side is shingled, because only the ~1% of corpus
+    docs that collide with the new shard ever need verify shingles — the
+    r5 A/B at 1.28M docs / ~1% planted dups (BENCH.md) measured this
+    shape 2.05× faster than shingling the whole corpus with broadcast
+    joins on (19.0 s vs 39.1 s) and 1.06× with them off, and the avoided
+    work grows with the corpus.
 
     Differences vs :func:`minhash_near_duplicates` (same-shard dedup):
     only new×corpus pairs are considered (new×new belongs to the shard's
@@ -588,8 +516,7 @@ def incremental_near_duplicates(
     # measured cache-thrash result there; the new shard is usually small
     # but the same discipline keeps the operator scale-safe). The corpus
     # side is NOT pre-shingled here: its verify shingles are computed
-    # only where needed (after the candidate semi-join in the default
-    # candidate_first shape — the whole point of that A/B winner).
+    # only after the candidate semi-join.
     new_base = _shingle_sets(new_df, id_col, text_col, n)
     new_sigs = _signatures_from_shingles(new_base, n_hashes, seed)
     new_bands = _band_table(new_sigs, bands, n_hashes)
@@ -601,28 +528,16 @@ def incremental_near_duplicates(
         .select(F.col("id").alias("new_id"), "corpus_id")
         .distinct()
     )
-    # candidate_first=True: semi-join the corpus side on the candidate id
-    # set BEFORE computing its shingle sets — skips the O(corpus) shingle
-    # pass for the ~99% of corpus docs with no colliding band (the r5
-    # measured winner in both broadcast regimes). Only that shape gives
-    # ``cand`` multiple consumers (two semi-joins + the verify join), so
-    # only it persists (released via scope/release_pair_cache); the
-    # default path consumes ``cand`` exactly once and a persist would be
-    # pure cache-write overhead at corpus scale.
-    shn_src = new_base
-    shc_src = corpus_df
-    if candidate_first:
-        cand = _register_cache(cand)
-        shn_src = new_base.join(
-            cand.select("new_id"), F.col("id") == F.col("new_id"), "left_semi"
-        )
-        shc_src = corpus_df.join(
-            cand.select("corpus_id"), F.col(id_col) == F.col("corpus_id"), "left_semi"
-        )
-    shn = shn_src.select(
-        F.col("id").alias("new_id"), F.col("sh").alias("sh_n")
+    # ``cand`` has three consumers (two semi-joins + the verify join), so
+    # it is persisted (released via scope/release_pair_cache).
+    cand = scoped_persist(cand)
+    shn = new_base.join(
+        cand.select("new_id"), F.col("id") == F.col("new_id"), "left_semi"
+    ).select(F.col("id").alias("new_id"), F.col("sh").alias("sh_n"))
+    corpus_cand = corpus_df.join(
+        cand.select("corpus_id"), F.col(id_col) == F.col("corpus_id"), "left_semi"
     )
-    shc = _shingle_sets(shc_src, id_col, text_col, n).select(
+    shc = _shingle_sets(corpus_cand, id_col, text_col, n).select(
         F.col("id").alias("corpus_id"), F.col("sh").alias("sh_c")
     )
     # merge-hinted shingle sides — see minhash_near_duplicates: the
@@ -658,36 +573,18 @@ def minhash_near_duplicates(
     bands: int = 16,
     seed: int = 42,
     max_bucket: int | None = 10_000,
-    spill_dir: str | None = None,
-    candidate_first: bool = False,
 ) -> DataFrame:
     """LSH candidates verified with exact Jaccard ≥ threshold.
 
-    Verify-stage shape (``candidate_first``) — MEASURED r5, see
-    BENCH.md's A/B section (``bench.py --lsh-ab``):
-
-    - ``False`` (default, "always-shingle"): every doc's shingle array is
-      computed in the same narrow pass that the self-join signature
-      stage already scans, and joined against the candidate pairs; when
-      candidates ≪ corpus Spark/AQE broadcasts the candidate side, so
-      the verify never shuffles the corpus. Measured FASTER than
-      candidate-first for this same-shard self-join in BOTH broadcast
-      regimes at 1.28M docs / ~1% dups: 1.41× with broadcast joins on,
-      1.16× with them disabled — shingling is cheap JVM map work, so
-      skipping it for non-candidates never repays candidate-first's
-      materialization barrier + two extra semi-join stages here.
-    - ``True`` ("candidate-first"): semi-join the corpus down to
-      candidate ids before shingling. The measured win for this shape is
-      the INCREMENTAL job (:func:`incremental_near_duplicates`, where it
-      is the default): there the corpus side does not otherwise need
-      verify shingles at all, so the semi-join removes O(corpus) work
-      (measured 1.10–1.17× at 1.28M docs, both broadcast regimes).
-      Output identical either way
-      (test_candidate_first_ab_equivalence).
-
-    ``spill_dir`` switches the banded-signature cache from executor-memory
-    persist() to a Hive-bucketed on-disk table (corpus-scale mode; see
-    ``_bucket_self_join``). Pair output is identical either way.
+    Verify shape: every doc's shingle array rides the narrow pass the
+    signature stage already scans and is joined against the candidate
+    pairs directly — no semi-join down to candidate ids first, because
+    this self-join shingles the whole shard anyway; the r5 A/B at 1.28M
+    docs / ~1% planted dups (BENCH.md) measured this shape 1.39× faster
+    than semi-joining first with broadcast joins on (55.2 s vs 76.9 s)
+    and 1.41× with them off. (The incremental job, whose corpus side has
+    no other reason to be shingled, measured the opposite and semi-joins;
+    see :func:`incremental_near_duplicates`.)
 
     The verify stage computes Jaccard PER CANDIDATE PAIR (join the two
     distinct-shingle arrays, ``array_intersect`` JVM-side): cost is
@@ -702,19 +599,6 @@ def minhash_near_duplicates(
     star subset (complete for dedup GROUPING, not for exhaustive pair
     listing — use ``max_bucket=None`` for that). Call
     :func:`release_pair_cache` on the result after materializing it.
-
-    History of the default: r4 argued the candidate-first semi-join was
-    the scale shape ("always-shingle shuffles the corpus to verify a
-    near-empty pair set"). The fixed-harness r5 A/B at 1.28M docs / ~1%
-    planted dups MEASURED the split to be by JOB SHAPE, not by
-    broadcastability: in this same-shard self-join the corpus is fully
-    scanned for signatures regardless, shingles ride that same narrow
-    pass, and the tiny candidate side broadcasts (or, with broadcast
-    disabled, shuffles 8-byte ids) — always-shingle wins 1.41×/1.16×
-    in the two regimes. The r4 argument survives only where the corpus
-    side has no other reason to be shingled — the incremental new×corpus
-    job, where candidate-first wins 1.10–1.17× and is the default.
-    Numbers: BENCH.md A/B section (``bench.py --lsh-ab``).
     """
     # r7: the same shingle-hash pass feeds the signature stage and both
     # verify sides (previously the verify re-built string shingle arrays
@@ -727,30 +611,16 @@ def minhash_near_duplicates(
     # still halves verify bytes and runs ``array_intersect`` on longs.
     base = _shingle_sets(df, id_col, text_col, n)
     sigs = _signatures_from_shingles(base, n_hashes, seed)
-    cand = minhash_lsh_candidates(sigs, bands, n_hashes, max_bucket, spill_dir)
-    # candidate_first=True: semi-join the (cached) shingle base on the
-    # candidate id set before the verify join (the huge-candidate-set
-    # escape hatch; see the docstring's measured decision rule). Only
-    # that shape gives ``cand`` multiple consumers (the id-set union +
-    # the verify join), so only it persists (released via
-    # scope/release_pair_cache); the default path consumes ``cand`` once.
-    # No .distinct() on the id set: left_semi deduplicates by construction,
-    # and the extra shuffle measured ~+3s on the sf0.1 gate corpus.
-    sh = base
-    if candidate_first:
-        cand = _register_cache(cand)
-        cand_ids = cand.select(F.col("id_a").alias("cid")).unionAll(
-            cand.select(F.col("id_b").alias("cid"))
-        )
-        sh = base.join(cand_ids, F.col("id") == F.col("cid"), "left_semi")
-    a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
+    # ``cand`` has one consumer (the verify join), so it is not persisted.
+    cand = minhash_lsh_candidates(sigs, bands, n_hashes, max_bucket)
+    a = base.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
+    b = base.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     # Explicit MERGE hints on the shingle sides of both verify joins
     # (r7): the hash-array base's pre-materialization size estimate is
     # badly wrong (array columns get default per-row widths under the
     # column-pruned Project above the Arrow UDF), and at 1.28M docs the
     # planner broadcast the ~2 GB array table — a driver OOM in the
-    # bench's LSH A/B. Candidate sets are not reliably small either
+    # 1.28M-doc LSH bench. Candidate sets are not reliably small either
     # (the A/B corpus produces millions), so neither side may ever be
     # a broadcast build: the verify is pinned as co-partitioned shuffle
     # joins on 8-byte ids — the shape that survives any scale; AQE still

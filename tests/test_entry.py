@@ -14,6 +14,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from language_identification_spark.operators.dedup import pair_cache_scope
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -67,8 +68,18 @@ ORACLE = entrymod.oracle_sql()
 QUERIES = entrymod.queries()
 
 
+@pytest.fixture
+def cache_scope():
+    """Free each query's persists and checkpoint blocks when its test
+    ends. The scope spans the whole test because checkpoint-backed
+    results become unreadable once it exits, and the test reads its
+    result twice (collect() and toPandas())."""
+    with pair_cache_scope():
+        yield
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_vs_oracle(name, spark, sf_dir, duck):
+def test_query_vs_oracle(name, spark, sf_dir, duck, cache_scope):
     q = QUERIES[name]
     sdf = q(spark, sf_dir)
     scols = sdf.columns

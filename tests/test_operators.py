@@ -232,10 +232,10 @@ def test_release_pair_cache(spark, sf_dir):
     # (blocks-excluded) drain frees all of them
     release_pair_cache()
     assert jsc.getPersistentRDDs().size() == baseline
-    # the deprecated positional argument still works but warns loudly
-    with pytest.warns(DeprecationWarning, match="pair_cache_scope"):
-        release_pair_cache(docs)
-    release_pair_cache()
+    # unguarded (max_bucket=None) the banded table has no hot-bucket scan
+    # and the verify consumes the candidates once: nothing is persisted
+    minhash_near_duplicates(docs, threshold=0.5, max_bucket=None).collect()
+    assert jsc.getPersistentRDDs().size() == baseline
 
 
 def test_pair_cache_scope_isolated_release(spark, sf_dir):
@@ -268,41 +268,6 @@ def test_pair_cache_scope_isolated_release(spark, sf_dir):
     assert got_b == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)]
     dedup.release_pair_cache(include_blocks=True)
     assert jsc.getPersistentRDDs().size() == baseline
-
-
-def test_spill_dir_honored_without_guard(spark, dup_docs, tmp_path):
-    """ADVICE r4: spill_dir used to be silently ignored when
-    max_bucket=None. Now the corpus-scale disk-backed mode engages
-    independently of the hot-bucket guard: same pairs, a spill table
-    exists during the run, and no banded persist is live."""
-    from language_identification_spark.operators import dedup
-
-    dedup.release_pair_cache(include_blocks=True)
-    with dedup.pair_cache_scope():
-        mem = sorted(
-            map(
-                tuple,
-                dedup.minhash_near_duplicates(
-                    dup_docs, threshold=0.5, max_bucket=None
-                ).collect(),
-            )
-        )
-
-    def spill_tables():
-        return [
-            t.name
-            for t in spark.catalog.listTables()
-            if t.name.startswith("lid_banded_spill_")
-        ]
-
-    with dedup.pair_cache_scope():
-        spill = dedup.minhash_near_duplicates(
-            dup_docs, threshold=0.5, max_bucket=None, spill_dir=str(tmp_path)
-        )
-        got = sorted(map(tuple, spill.collect()))
-        assert spill_tables() != []
-    assert got == mem
-    assert spill_tables() == []
 
 
 def test_split_empty_regex_boundary(spark):
@@ -530,43 +495,6 @@ def test_ivf_no_partitionless_window(spark, emb):
         ), line
 
 
-def test_spill_to_table_mode(spark, dup_docs, tmp_path):
-    """r4: spill_dir switches the multi-consumer banded cache from
-    executor-memory persist() to a Hive-bucketed on-disk table (the
-    corpus-scale mode). Pair output identical; no persistent blocks are
-    live during the run (banded is on disk, and the default verify path
-    consumes candidates once without caching); release drops the catalog
-    table."""
-    dedup.release_pair_cache(include_blocks=True)
-    mem = dedup.minhash_near_duplicates(dup_docs, threshold=0.5)
-    got_mem = sorted(map(tuple, mem.collect()))
-    dedup.release_pair_cache(include_blocks=True)
-
-    jsc = spark.sparkContext._jsc.sc()
-    baseline = jsc.getPersistentRDDs().size()
-    spill = dedup.minhash_near_duplicates(
-        dup_docs, threshold=0.5, spill_dir=str(tmp_path)
-    )
-    got_spill = sorted(map(tuple, spill.collect()))
-    assert got_spill == got_mem
-
-    def spill_tables():
-        return [
-            t.name
-            for t in spark.catalog.listTables()
-            if t.name.startswith("lid_banded_spill_")
-        ]
-
-    assert len(spill_tables()) == 1
-    # banded table on disk, not in executor memory — and the default
-    # (single-consumer) verify path persists nothing else, so NO
-    # persistent blocks are live at all
-    assert jsc.getPersistentRDDs().size() == baseline
-    dedup.release_pair_cache(include_blocks=True)
-    assert jsc.getPersistentRDDs().size() == baseline
-    assert spill_tables() == []
-
-
 def test_dedup_components_raises_on_iteration_cap(spark):
     """Non-convergence must be loud: silently returning partial labels
     would make canonical_documents under-delete duplicates."""
@@ -576,49 +504,25 @@ def test_dedup_components_raises_on_iteration_cap(spark):
     dedup.release_pair_cache(include_blocks=True)
 
 
-def test_candidate_first_ab_equivalence(spark, dup_docs):
-    """r5: the candidate-first and always-shingle verify shapes are an
-    output-identical A/B pair, for both same-shard and incremental LSH."""
-    with dedup.pair_cache_scope():
-        a = sorted(
-            map(
-                tuple,
-                dedup.minhash_near_duplicates(
-                    dup_docs, threshold=0.5, candidate_first=True
-                ).collect(),
-            )
-        )
-        b = sorted(
-            map(
-                tuple,
-                dedup.minhash_near_duplicates(
-                    dup_docs, threshold=0.5, candidate_first=False
-                ).collect(),
-            )
-        )
-    assert a == b and len(a) > 0
-
+def test_incremental_equals_cross_subset(spark, dup_docs):
+    """Splitting one shard into a new half (odd ids) and a corpus half
+    (even ids): the incremental job finds exactly the odd×even pairs of
+    the same-shard job, oriented (new, corpus), with equal Jaccard."""
     corpus = dup_docs.filter("doc_id % 2 = 0")
     new = dup_docs.filter("doc_id % 2 = 1")
     with dedup.pair_cache_scope():
-        ia = sorted(
-            map(
-                tuple,
-                dedup.incremental_near_duplicates(
-                    new, corpus, threshold=0.5, candidate_first=True
-                ).collect(),
-            )
-        )
-        ib = sorted(
-            map(
-                tuple,
-                dedup.incremental_near_duplicates(
-                    new, corpus, threshold=0.5, candidate_first=False
-                ).collect(),
-            )
-        )
-    assert ia == ib and len(ia) > 0
-
+        inc = {
+            tuple(r)
+            for r in dedup.incremental_near_duplicates(
+                new, corpus, threshold=0.5
+            ).collect()
+        }
+        same = dedup.minhash_near_duplicates(dup_docs, threshold=0.5).collect()
+    cross = set()
+    for a, b, j in same:
+        if a % 2 != b % 2:
+            cross.add((a, b, j) if a % 2 == 1 else (b, a, j))
+    assert inc == cross and len(inc) > 0
 
 def test_line_document_frequency(spark):
     """r5 boilerplate family: a line counts once per doc no matter how

@@ -155,12 +155,11 @@ def _assert_verify_shingles_semi_joined(df, sh_aliases):
     """Every verify-stage shingle Project (aliasing to the ``sh_*``
     output columns) must sit above a LeftSemi join on the candidate id
     set — i.e. the verify side is pruned to candidates first. Two
-    legitimate shapes since the r7 shared-shingle-base rework: the
-    cached base re-aliased directly above the semi-join
-    (Project → LeftSemi), or — the corpus side of the incremental job,
-    where shingles are computed ONLY after the semi-join (the whole
-    point of candidate-first) — Project → ArrowEvalPython(shingles) →
-    LeftSemi. The signature-stage shingle pass (plain ``sh``/``sig``)
+    legitimate shapes since the r7 shared-shingle-base rework: the new
+    shard's shingle base re-aliased directly above the semi-join
+    (Project → LeftSemi), or — the corpus side, where shingles are
+    computed ONLY after the semi-join — Project →
+    ArrowEvalPython(shingles) → LeftSemi. The signature-stage shingle pass (plain ``sh``/``sig``)
     is intentionally not matched: it must see all docs."""
     plan = df._jdf.queryExecution().executedPlan().toString()
     lines = plan.splitlines()
@@ -178,33 +177,10 @@ def _assert_verify_shingles_semi_joined(df, sh_aliases):
     assert hits >= 2, f"expected >=2 verify shingle Projects, found {hits}\n{plan}"
 
 
-def test_lsh_verify_candidate_first_plan(spark, sf_dir):
-    """When the huge-candidate-set escape hatch is requested
-    (candidate_first=True — see the r5 measured decision rule in the
-    operator docstring), both LSH verify stages must actually semi-join
-    the document sides on the candidate id set BEFORE re-shingling."""
-    from language_identification_spark.operators import dedup
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    near = dedup.minhash_near_duplicates(
-        docs.limit(100), threshold=0.5, candidate_first=True
-    )
-    _assert_verify_shingles_semi_joined(near, ("sh_a", "sh_b"))
-
-    corpus = docs.filter("doc_id % 2 = 0")
-    new = docs.filter("doc_id % 2 = 1")
-    inc = dedup.incremental_near_duplicates(
-        new, corpus, threshold=0.5, candidate_first=True
-    )
-    _assert_verify_shingles_semi_joined(inc, ("sh_n", "sh_c"))
-    dedup.release_pair_cache()
-
-
 def test_incremental_default_is_candidate_first(spark, sf_dir):
-    """The fixed-harness r5 A/B made candidate-first the INCREMENTAL
-    default (it wins in both broadcast regimes there, and the avoided
-    corpus-side shingle pass is O(corpus)); pin that the no-flag call
-    semi-joins before re-shingling."""
+    """The incremental job semi-joins both sides on the candidate id set
+    before re-shingling (the r5 A/B winner there: the avoided corpus-side
+    shingle pass is O(corpus)); pin that shape."""
     from language_identification_spark.operators import dedup
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
